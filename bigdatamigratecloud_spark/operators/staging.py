@@ -162,7 +162,17 @@ def wide_to_staging(
     )
 
 
-def pivot_from_staging(staging: DataFrame, schema: T.StructType, drop_errors: bool = True) -> DataFrame:
+# per-record cell counts that pivot_from_staging(keep_counts=True) appends
+ERROR_CELLS = "__error_cells"
+VALID_CELLS = "__valid_cells"
+
+
+def pivot_from_staging(
+    staging: DataFrame,
+    schema: T.StructType,
+    drop_errors: bool = True,
+    keep_counts: bool = False,
+) -> DataFrame:
     """Long EAV -> wide records (A5), with typed parse back per §1.2.
 
     ONE shuffle keyed by record id; the reshape is conditional
@@ -172,10 +182,16 @@ def pivot_from_staging(staging: DataFrame, schema: T.StructType, drop_errors: bo
     driver scan is a bottleneck at 100 TB; SURVEY §4).  The field list
     comes from the target schema at plan time, so no data-dependent
     planning.
+
+    ``drop_errors`` masks cells whose ``error`` is set out of the values
+    (their field reads NULL) and drops records left with no valid cell —
+    the same rows as filtering the error cells out before the shuffle.
+    ``keep_counts=True`` keeps every record instead and appends two
+    columns: ERROR_CELLS, the record's error-cell count, and VALID_CELLS,
+    its valid-cell count.  A caller that counts quarantined cells inside
+    its own write (``plans.pipeline``) drops ``VALID_CELLS = 0`` itself.
     """
-    src = staging
-    if drop_errors:
-        src = src.filter(F.col("error").isNull())
+    valid = F.col("error").isNull() if drop_errors else F.lit(True)
     # group-key ORDER matters for speed, not semantics: max(string)
     # forces SortAggregate (string agg buffers are not hash-mutable),
     # and the sort compares keys left to right — record_no FIRST makes
@@ -183,14 +199,20 @@ def pivot_from_staging(staging: DataFrame, schema: T.StructType, drop_errors: bo
     # instead of equal-comparing the two constant-per-melt strings
     # (package_code, table_name) first.  Measured ~20% on the sf0.1
     # orders roundtrip; output is key-order-independent.
-    cells = src.groupBy("record_no", "package_code", "table_name").agg(
+    cells = staging.groupBy("record_no", "package_code", "table_name").agg(
         *[
-            F.max(F.when(F.col("field_name") == f.name, F.col("value"))).alias(f.name)
+            F.max(F.when(valid & (F.col("field_name") == f.name), F.col("value"))).alias(f.name)
             for f in schema.fields
-        ]
+        ],
+        F.count(F.when(~valid, F.lit(1))).alias(ERROR_CELLS),
+        F.count(F.when(valid, F.lit(1))).alias(VALID_CELLS),
     )
+    counts = [ERROR_CELLS, VALID_CELLS] if keep_counts else []
+    if not keep_counts:
+        cells = cells.filter(F.col(VALID_CELLS) > 0)
     return cells.select(
-        *[deserialize_cell(quoted_col(f.name), f.dataType).alias(f.name) for f in schema.fields]
+        *[deserialize_cell(quoted_col(f.name), f.dataType).alias(f.name) for f in schema.fields],
+        *counts,
     )
 
 

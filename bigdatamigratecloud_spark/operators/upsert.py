@@ -48,16 +48,14 @@ def fk_violations(
     return child.join(p, child[child_col] == p[parent_col], "left_anti")
 
 
-def fk_violation_counts_fused(
+def fk_markers(
     child: DataFrame, fks: Sequence[tuple[str, DataFrame, str]], child_name: str
-) -> DataFrame:
-    """Violation counts for ALL of a child table's FK relations in ONE pass
-    (J5 sweep).  Instead of one left_anti + count per relation (which scans
-    the child once per FK — lineitem has 3), left-join every broadcast
-    parent key set onto a single child scan and count unmatched keys with
-    conditional aggregation; then unpivot the one result row to
-    (relation, violations) rows.  At 100 TB this is the difference between
-    one fact-table scan and |FK| scans."""
+) -> tuple[DataFrame, list[tuple[str, str]]]:
+    """Left-join every broadcast parent key set onto ``child`` (J5 probe):
+    returns the probe frame and its ``(relation, marker column)`` pairs.
+    A marker is NULL exactly where the child row's FK has no parent,
+    NULL FKs included.  The child side gains no shuffle, so the probe
+    rides in whatever stage already produces ``child``."""
     probe = child
     markers: list[tuple[str, str]] = []  # (relation, marker_col)
     for i, (child_col, parent, parent_col) in enumerate(fks):
@@ -78,6 +76,20 @@ def fk_violation_counts_fused(
             F.broadcast(keys), F.col(child_col) == F.col(marker), "left"
         )
         markers.append((f"{child_name}.{child_col}", marker))
+    return probe, markers
+
+
+def fk_violation_counts_fused(
+    child: DataFrame, fks: Sequence[tuple[str, DataFrame, str]], child_name: str
+) -> DataFrame:
+    """Violation counts for ALL of a child table's FK relations in ONE pass
+    (J5 sweep).  Instead of one left_anti + count per relation (which scans
+    the child once per FK — lineitem has 3), left-join every broadcast
+    parent key set onto a single child scan (:func:`fk_markers`) and count
+    unmatched keys with conditional aggregation; then unpivot the one
+    result row to (relation, violations) rows.  At 100 TB this is the
+    difference between one fact-table scan and |FK| scans."""
+    probe, markers = fk_markers(child, fks, child_name)
     counted = probe.agg(
         *[
             F.count(F.when(F.col(marker).isNull(), F.lit(1))).alias(marker)
@@ -200,13 +212,22 @@ def create_missing_codes(
 ) -> DataFrame:
     """Upsert missing FK parents (J5 action): distinct child keys not in
     parent become new parent rows with NULL/default attributes."""
+    return parent.unionByName(missing_codes(parent, parent_col, child, child_col, defaults))
+
+
+def missing_codes(
+    parent: DataFrame, parent_col: str, child: DataFrame, child_col: str, defaults: dict | None = None
+) -> DataFrame:
+    """Only the rows :func:`create_missing_codes` adds to ``parent``: an
+    importer appends these to the parent's stored target instead of
+    rewriting the whole parent."""
     missing = (
         child.select(F.col(child_col).alias(parent_col))
         .dropDuplicates([parent_col])
         .join(F.broadcast(parent.select(parent_col)), parent_col, "left_anti")
     )
     defaults = defaults or {}
-    new_rows = missing.select(
+    return missing.select(
         *[
             F.col(parent_col).cast(dict(parent.dtypes)[c]).alias(c)
             if c == parent_col
@@ -214,7 +235,6 @@ def create_missing_codes(
             for c in parent.columns
         ]
     )
-    return parent.unionByName(new_rows)
 
 
 def merge_upsert(

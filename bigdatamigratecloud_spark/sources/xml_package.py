@@ -421,18 +421,26 @@ def decompress_package(path: str, workdir: str | None = None) -> str:
 
 
 def import_package_to_staging(
-    spark: SparkSession, path: str, expected_package_code: str | None = None
+    spark: SparkSession,
+    path: str,
+    expected_package_code: str | None = None,
+    workdir: str | None = None,
 ) -> tuple[PackageHeader, dict[str, DataFrame]]:
     """Package file -> {table_name: long staging DataFrame} (§3.1 up to the
     EAV fill).  Enforces the package-code check (XML:410-413: mismatched
     code is a hard error).  Values stay raw strings; validation/typing is
-    the caller's next stage."""
+    the caller's next stage.
+
+    The staging frames read the XML that :func:`decompress_package`
+    writes into ``workdir`` (default: a fresh ``bdmc_pkg_*`` temp dir).
+    A caller that passes ``workdir`` owns it and may remove it once no
+    frame built from the package will run again."""
     header = peek_package(path)
     if expected_package_code is not None and header.package_code != expected_package_code:
         raise ValueError(
             f"package code mismatch: file has {header.package_code!r}, expected {expected_package_code!r}"
         )
-    xml_path = decompress_package(path)
+    xml_path = decompress_package(path, workdir)
     out: dict[str, DataFrame] = {}
     for t in header.tables:
         fields = [f["field_name"] for f in t["fields"]]
